@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.core.JobConfig
 import graft.io.Jsonl
@@ -19,6 +20,14 @@ import graft.pipeline.{EnrichJob, EnrichOptions}
   * (bin/job.rb:18-24, README.md:35): with no `--in` the corpus is read
   * from STDIN, with no `--out` the result JSONL streams to STDOUT —
   * `graft.Main job.yml < in.jsonl > out.jsonl` just works.
+  *
+  * One pass, one call per record: the input is read once and every
+  * well-formed record goes to the backend once. Without `--err` one
+  * Spark job writes the enriched records. With `--err` ONE Spark job
+  * writes all three outputs — enriched records to outDir, corrupt
+  * lines to errDir/corrupt, dead-letters to errDir/failed — through
+  * [[Jsonl.writeByKind]], so the LLM stage is never re-run for a
+  * second output.
   *
   * Exit-code contract matches the reference (bin/job.rb:6-24,
   * spec/bin_job_spec.rb:42-54): bad usage → 1, missing YAML → 1,
@@ -88,7 +97,17 @@ object Main {
         }
         val split = Jsonl.read(spark, inPath)
         val result = EnrichJob.run(split.good, cfg, client, EnrichOptions())
-        Jsonl.write(result.good, outDir)
+        flags.get("err") match {
+          // one job for all three outputs: writing good and dead-letter
+          // separately would run the LLM stage, and pay every call, twice
+          case Some(errDir) =>
+            Jsonl.writeByKind(
+              result.lines.unionByName(
+                split.corrupt.select(lit("corrupt").as("kind"), col("value"))),
+              Seq("good" -> outDir, "corrupt" -> s"$errDir/corrupt",
+                "failed" -> s"$errDir/failed"))
+          case None => Jsonl.write(result.good, outDir)
+        }
         // no --out → stream the part files to STDOUT, reference-shaped
         // (one JSON object per line; order across partitions is the
         // engine's, as documented for every distributed sink here)
@@ -104,10 +123,6 @@ object Main {
             val s = Files.lines(p)
             try s.forEach(l => System.out.println(l)) finally s.close()
           }
-        }
-        flags.get("err").foreach { errDir =>
-          split.corrupt.write.mode("overwrite").text(s"$errDir/corrupt")
-          result.deadLetter.write.mode("overwrite").json(s"$errDir/failed")
         }
         0
       } finally {

@@ -1,6 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.UUID
+
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -49,15 +52,58 @@ object Jsonl {
       .filter(col("r").isNotNull)
       .select(col("r.id"), col("r.texts"), col("r.images"))
 
-  /** Write records as one compact JSON object per line. texts/images
-    * are normalized to {} / [] first — the reference always emits both
-    * (lib/job_processor.rb:43-47).
+  /** One record as its output line: compact JSON with texts/images
+    * normalized to {} / [] — the reference always emits both
+    * (lib/job_processor.rb:43-47). The one encoder behind [[write]] and
+    * `graft.Main`'s single-job write.
     */
+  def line(id: Column, texts: Column, images: Column): Column =
+    to_json(struct(
+      id.as("id"),
+      coalesce(texts, map().cast("map<string,string>")).as("texts"),
+      coalesce(images, array().cast("array<string>")).as("images")))
+
+  /** Write records as one compact JSON object per line ([[line]]). */
   def write(df: DataFrame, path: String): Unit =
-    df.select(to_json(struct(
-        col("id"),
-        coalesce(col("texts"), map().cast("map<string,string>")).as("texts"),
-        coalesce(col("images"), array().cast("array<string>")).as("images")))
-        .as("value"))
+    df.select(line(col("id"), col("texts"), col("images")).as("value"))
       .write.mode("overwrite").text(path)
+
+  /** Write a frame of (`kind`, `value`) lines in ONE Spark job, one
+    * text directory per kind: `targets` maps each kind to its
+    * directory.
+    *
+    * The job writes every kind into a staging directory beside the
+    * first target (`partitionBy("kind")`). Each `kind=` directory is
+    * then renamed to its target, replacing what was there (the
+    * `mode("overwrite")` semantics of a plain write), and gets its own
+    * `_SUCCESS` marker. A kind with no rows gets an empty directory. A
+    * target on another filesystem than the staging directory is copied
+    * instead of renamed. Within a kind, each partition's lines keep
+    * their input order.
+    */
+  def writeByKind(lines: DataFrame, targets: Seq[(String, String)]): Unit = {
+    val conf = lines.sparkSession.sparkContext.hadoopConfiguration
+    val first = new Path(targets.head._2)
+    val staging = new Path(first.getParent, s".${first.getName}-staging-${UUID.randomUUID()}")
+    // the writer would sort on kind alone, and its sort is not stable
+    // once it spills; sorting on (kind, seq) first keeps input order
+    // and leaves the writer nothing to sort
+    lines.withColumn("seq", monotonically_increasing_id())
+      .sortWithinPartitions("kind", "seq")
+      .select("kind", "value")
+      .write.partitionBy("kind").text(staging.toString)
+    val fs = staging.getFileSystem(conf)
+    try targets.foreach { case (kind, dir) =>
+      val src = new Path(staging, s"kind=$kind")
+      fs.mkdirs(src)
+      fs.create(new Path(src, "_SUCCESS")).close()
+      val dst = new Path(dir)
+      val dstFs = dst.getFileSystem(conf)
+      dstFs.delete(dst, true)
+      dstFs.mkdirs(dst.getParent)
+      if (dstFs.getUri == fs.getUri) {
+        if (!fs.rename(src, dst)) sys.error(s"could not move $src to $dst")
+      } else FileUtil.copy(fs, src, dstFs, dst, true, conf)
+    } finally { fs.delete(staging, true); () }
+  }
 }

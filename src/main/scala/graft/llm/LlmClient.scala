@@ -26,6 +26,22 @@ trait LlmClient extends Serializable {
   def chat(messages: Seq[Msg], cfg: JobConfig): String
 }
 
+/** The backend answered with a non-2xx status. The message keeps the
+  * wire form `HTTP <code>: <body>`, so a dead-letter reads
+  * `API request failed: HTTP 400: …`. `retryAfter` is the raw
+  * `Retry-After` header, when the backend sent one.
+  */
+final class HttpStatusException(
+    val status: Int, body: String, val retryAfter: Option[String] = None)
+    extends RuntimeException(s"HTTP $status: ${body.take(500)}")
+
+/** A 2xx answer whose body is not a chat completion. Asking again gets
+  * the same body, so the pipeline does not retry it. The message is
+  * the parser's own.
+  */
+final class MalformedResponseException(cause: Throwable)
+    extends RuntimeException(cause.getMessage, cause)
+
 /** Deterministic fake backend for tests and benchmarks — response is a
   * pure function of the request (mirrors the reference's mocked
   * OpenAI::Client, spec/job_processor_spec.rb:78-94). Isolates engine

@@ -4,6 +4,9 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import scala.jdk.OptionConverters._
+
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
@@ -45,9 +48,12 @@ final class OpenAiClient(
       .build()
     val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
     if (resp.statusCode() / 100 != 2)
-      throw new RuntimeException(s"HTTP ${resp.statusCode()}: ${resp.body().take(500)}")
+      throw new HttpStatusException(resp.statusCode(), resp.body(),
+        resp.headers().firstValue("Retry-After").toScala)
     // choices[0].message.content, default "" (lib/job_processor.rb:173)
-    val root = mapper.readTree(resp.body())
+    val root =
+      try mapper.readTree(resp.body())
+      catch { case e: JsonProcessingException => throw new MalformedResponseException(e) }
     root.path("choices").path(0).path("message").path("content").asText("")
   }
 }

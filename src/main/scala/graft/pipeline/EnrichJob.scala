@@ -1,16 +1,17 @@
 package graft.pipeline
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors,
+  ThreadLocalRandom, TimeUnit, Future => JFuture}
 
 import scala.collection.mutable
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.JobConfig
-import graft.llm.{LlmClient, Msg}
+import graft.io.Jsonl
+import graft.llm.{HttpStatusException, LlmClient, MalformedResponseException, Msg}
 import graft.template.Template
 
 /** Tuning for the effectful LLM stage. Defaults follow the reference's
@@ -56,7 +57,27 @@ final case class Called(
 
 object EnrichJob {
 
-  final case class Result(good: DataFrame, deadLetter: DataFrame)
+  /** @param lines every called record once, as the line a sink writes
+    *   for it: `kind` is "good" or "failed", and `value` is the good
+    *   record's JSONL line ([[Jsonl.line]]) or the dead-letter row as
+    *   JSON. One action over it runs the LLM stage once and feeds both
+    *   outputs; without `materialize`, `good` and `deadLetter` each
+    *   re-run the stage.
+    */
+  final case class Result(good: DataFrame, deadLetter: DataFrame, lines: DataFrame)
+
+  /** Completed calls a partition may hold unemitted, per slot of
+    * `concurrency`. Output keeps input order, so a slow head record
+    * holds back everything behind it; the window keeps calling past it
+    * until this many answers wait behind the head. It bounds the
+    * records held in memory, not the calls in flight.
+    */
+  private val BufferedPerSlot = 16
+
+  /** Largest random share added to every back-off, so partitions that
+    * failed together do not retry together.
+    */
+  private val JitterFraction = 0.2
 
   /** `<think>…</think>` removal + trim (reference clean_content,
     * lib/job_processor.rb:207-210; Ruby /m ≡ Java (?s)). Ruby strip
@@ -69,9 +90,11 @@ object EnrichJob {
       "(?s)\\A[\\s\\u0000]+|[\\s\\u0000]+\\z", "")
 
   /** @param materialize localCheckpoint the called frame BEFORE the
-    *   good/dead-letter fork, so a caller consuming BOTH forks (e.g.
-    *   [[ValidateRepair]], which must account for call failures) runs
-    *   the LLM stage exactly once; the default keeps the stage lazy
+    *   good/dead-letter fork, so a caller consuming BOTH forks runs the
+    *   LLM stage exactly once. Its callers are [[ValidateRepair]]
+    *   (q224/q227), which must account for call failures, and q262's
+    *   dead-letter replay. `graft.Main` does not use it: it writes
+    *   [[Result.lines]] in one job. The default keeps the stage lazy
     *   for the common good-only consumers. Two deliberate trade-offs
     *   when true (ADVICE r14): the checkpoint is EAGER, so every
     *   first-pass LLM call fires AT run() time even if the returned
@@ -258,17 +281,35 @@ object EnrichJob {
       // spark.sql.mapKeyDedupPolicy
       map_filter(col("texts"), (k, _) => k =!= cfg.outputLabel),
       map(lit(cfg.outputLabel), cleanContent(col("response"))))
+    val ok = col("error").isNull
+    val deadLetter = Seq(col("id"), col("error"),
+      to_json(struct(col("id"), col("texts"), col("images"))).as("record"))
     Result(
-      good = called.filter(col("error").isNull)
+      good = called.filter(ok)
         .select(col("id"), withLabel.as("texts"), col("images")),
-      deadLetter = called.filter(col("error").isNotNull)
-        .select(col("id"), col("error"),
-          to_json(struct(col("id"), col("texts"), col("images"))).as("record")))
+      deadLetter = called.filter(!ok).select(deadLetter: _*),
+      lines = called.select(
+        when(ok, lit("good")).otherwise(lit("failed")).as("kind"),
+        when(ok, Jsonl.line(col("id"), withLabel, col("images")))
+          .otherwise(to_json(struct(deadLetter: _*))).as("value")))
   }
 
-  /** One partition's work: a sliding window of `concurrency` in-flight
-    * requests over a dedicated pool; results come back in input order.
-    * The pool dies with the iterator — no cross-task leakage.
+  /** One partition's work, in input order, with up to `concurrency`
+    * calls running on a dedicated pool.
+    *
+    * The window counts RUNNING calls, not unemitted records: when a
+    * call finishes, the next record is submitted even while the head
+    * record is still pending, so one slow response or retry back-off
+    * does not idle the other slots. Answers that finish before the
+    * head wait in input order, at most [[BufferedPerSlot]] ×
+    * `concurrency` of them.
+    *
+    * No wait is unbounded: each record has a deadline of
+    * [[recordDeadlineMs]] from its submission. A record past it is
+    * dead-lettered as `API request failed: …` and its call is
+    * cancelled (the thread is interrupted).
+    *
+    * The pool dies with the task — no cross-task leakage.
     */
   private def callPartition(
       it: Iterator[Prompted],
@@ -276,24 +317,27 @@ object EnrichJob {
       client: LlmClient,
       opts: EnrichOptions,
       useImages: Boolean): Iterator[Called] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, opts.concurrency))
+    val width = math.max(1, opts.concurrency)
+    val pool = Executors.newFixedThreadPool(width)
     // the pool must die with the TASK, not with iterator exhaustion:
     // partial consumption (downstream limit, task failure, write error)
     // would otherwise leak non-daemon threads + in-flight requests in a
     // long-lived executor JVM. Null TaskContext = driver-side test.
     Option(org.apache.spark.TaskContext.get())
       .foreach(_.addTaskCompletionListener[Unit](_ => pool.shutdownNow()))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // every submitted call, finished or cancelled, arrives here once
+    val finished = new ExecutorCompletionService[Called](pool)
+    val deadlineMs = recordDeadlineMs(opts, cfg.requestTimeoutSec)
 
     def callOne(r: Prompted): Called = {
       val messages = buildMessages(r, useImages)
       try Called(r.id, r.texts, r.images,
-        Some(withRetry(opts)(client.chat(messages, cfg))), None, r.cacheKey)
-      catch { case e: Throwable =>
+        Some(withRetry(opts, cfg.requestTimeoutSec)(client.chat(messages, cfg))),
+        None, r.cacheKey)
+      catch { case NonFatal(e) =>
         // reference error contract: "API request failed: …" to stderr,
         // record dropped, job continues (rb:178, spec/bin_job_spec.rb:117-137)
-        Called(r.id, r.texts, r.images, None,
-          Some(s"API request failed: ${e.getMessage}"), r.cacheKey)
+        callFailed(r, e.getMessage)
       }
     }
 
@@ -306,32 +350,100 @@ object EnrichJob {
       if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
       nextSlotNs = math.max(nextSlotNs + minIntervalNs, System.nanoTime())
     }
-    val source = it.map { r => throttle(); Future(callOne(r)) } // lazy — forced by enqueue
-    val inflight = mutable.Queue.empty[Future[Called]]
+
+    final case class Pending(r: Prompted, call: JFuture[Called], deadlineNs: Long)
+    val window = mutable.Queue.empty[Pending]
+    var running = 0
     new Iterator[Called] {
-      private def fill(): Unit =
-        while (inflight.size < math.max(1, opts.concurrency) && source.hasNext)
-          inflight.enqueue(source.next())
+      private def fill(): Unit = {
+        while (finished.poll() != null) running -= 1
+        while (running < width && window.size - running < BufferedPerSlot * width &&
+            it.hasNext) {
+          val r = it.next()
+          throttle()
+          window.enqueue(Pending(r, finished.submit(() => callOne(r)),
+            System.nanoTime() + deadlineMs * 1000000L))
+          running += 1
+        }
+      }
       override def hasNext: Boolean = {
         fill()
-        val more = inflight.nonEmpty
+        val more = window.nonEmpty
         if (!more) pool.shutdown()
         more
       }
       override def next(): Called = {
         fill()
-        Await.result(inflight.dequeue(), Duration.Inf)
+        val head = window.head
+        var left = head.deadlineNs - System.nanoTime()
+        while (!head.call.isDone && left > 0) {
+          // any finished call frees a slot for the next record
+          if (finished.poll(left, TimeUnit.NANOSECONDS) != null) { running -= 1; fill() }
+          left = head.deadlineNs - System.nanoTime()
+        }
+        window.dequeue()
+        if (head.call.isDone)
+          try head.call.get() catch { case e: ExecutionException => throw e.getCause }
+        else {
+          head.call.cancel(true)
+          callFailed(head.r, s"no response within ${deadlineMs / 1000.0} s")
+        }
       }
     }
   }
 
-  private def withRetry[A](opts: EnrichOptions)(f: => A): A = {
+  private def callFailed(r: Prompted, why: String): Called =
+    Called(r.id, r.texts, r.images, None, Some(s"API request failed: $why"), r.cacheKey)
+
+  /** Longest a record may take before it is dead-lettered: every
+    * attempt running to the request timeout, plus the longest possible
+    * back-off before each retry.
+    */
+  private[pipeline] def recordDeadlineMs(opts: EnrichOptions, timeoutSec: Int): Long = {
+    val timeoutMs = timeoutSec * 1000L
+    val longestBackoff = math.max(timeoutMs,
+      opts.retryBackoffMs * (1L << math.max(0, opts.maxRetries - 1)))
+    timeoutMs * (opts.maxRetries + 1) +
+      opts.maxRetries * (longestBackoff * (1 + JitterFraction)).toLong
+  }
+
+  /** 4xx other than 408/429, and a 2xx body that does not parse, give
+    * the same answer on every attempt. Any other non-fatal error may not.
+    */
+  private[pipeline] def isTerminal(e: Throwable): Boolean = e match {
+    case h: HttpStatusException =>
+      h.status / 100 == 4 && h.status != 408 && h.status != 429
+    case _: MalformedResponseException => true
+    case _ => false
+  }
+
+  /** Wait before retry number `attempt` (from 0): the backend's
+    * `Retry-After` when it is whole seconds, capped at the request
+    * timeout; otherwise (an HTTP-date, or no header) exponential
+    * back-off. Both get up to [[JitterFraction]] more at random.
+    */
+  private[pipeline] def backoffMs(
+      e: Throwable, attempt: Int, opts: EnrichOptions, timeoutSec: Int): Long = {
+    val retryAfterS = e match {
+      case h: HttpStatusException => h.retryAfter.flatMap(_.trim.toLongOption).filter(_ >= 0)
+      case _ => None
+    }
+    val base = retryAfterS.map(s => math.min(s, timeoutSec.toLong) * 1000L)
+      .getOrElse(opts.retryBackoffMs * (1L << attempt))
+    base + (base * JitterFraction * ThreadLocalRandom.current().nextDouble()).toLong
+  }
+
+  /** Retries only what another attempt can change. Catches non-fatal
+    * errors only, so an interrupted call stops instead of sleeping and
+    * retrying.
+    */
+  private[pipeline] def withRetry[A](opts: EnrichOptions, timeoutSec: Int)(f: => A): A = {
     var attempt = 0
     while (true) {
       try return f
       catch {
-        case e: Throwable if attempt < opts.maxRetries =>
-          Thread.sleep(opts.retryBackoffMs * (1L << attempt)) // exp backoff
+        case NonFatal(e) if attempt < opts.maxRetries && !isTerminal(e) =>
+          Thread.sleep(backoffMs(e, attempt, opts, timeoutSec))
           attempt += 1
       }
     }

@@ -1384,8 +1384,9 @@ object Sources extends Catalog {
       //   * corpus size keys off lineitem's cardinality (6k / 60k /
       //     600k at sf0.001/0.01/0.1) — the SQL analogue of the
       //     engine's explicit per-SF-dir size switch.
-      // Validated bit-exact vs an independent numpy float32 replica on
-      // every phash bit of both corpus sizes (tools/q58_proto.py).
+      // This SQL was checked bit-exact, on every phash bit of both
+      // corpus sizes, against an independent numpy float32 replica
+      // written while the oracle was developed.
       sql = Some(ImageNearDupOracleSql),
       scaleNote = "image dedup at 100 TB: decode (real javax.imageio) + phash is one map pass; candidates come from the 8-band (band,key) equi-join with pigeonhole-guaranteed recall ≤ hamming 7 — never a cartesian; the file-system ingest half of this pipeline (spark.read binaryFile → decode) is REGISTERED as q237 under this oracle VERBATIM"),
 

@@ -130,4 +130,24 @@ class OpenAiClientSpec extends AnyFunSuite {
         cfg(rf = Some(ResponseFormat.JsonSchema(nestedSchema)), useImages = true))
     }
   }
+
+  test("non-2xx answer: typed status, wire-form message, raw Retry-After") {
+    val backend = new LoopbackBackend(_ =>
+      (429, """{"error":"slow down"}""", Seq("Retry-After" -> "3")))
+    try {
+      val e = intercept[HttpStatusException] {
+        new OpenAiClient().chat(Seq(Msg("user", "x")), cfg().copy(backendEndpoint = backend.endpoint))
+      }
+      assert(e.status == 429)
+      assert(e.getMessage == """HTTP 429: {"error":"slow down"}""")
+      assert(e.retryAfter.contains("3"))
+    } finally backend.close()
+  }
+
+  test("2xx answer that is not JSON: MalformedResponseException") {
+    val backend = new LoopbackBackend(_ => (200, "<html>proxy error</html>", Nil))
+    try intercept[MalformedResponseException] {
+      new OpenAiClient().chat(Seq(Msg("user", "x")), cfg().copy(backendEndpoint = backend.endpoint))
+    } finally backend.close()
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.core.JobConfig
 import graft.io.Jsonl
-import graft.llm.FakeLlmClient
+import graft.llm.{FakeLlmClient, HttpStatusException, MalformedResponseException}
 
 /** End-to-end parity slice (SURVEY.md §7.2): the reference's README
   * example — records in, `texts[output_label]` appended, `<think>`
@@ -21,6 +21,14 @@ object EnrichJobSpec {
 
   /** static prompt log for the ValidateRepair frugality proof */
   val promptLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** calls running now, and the most seen at once (window specs) */
+  val inflight = new java.util.concurrent.atomic.AtomicInteger(0)
+  val maxInflight = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** calls finished while the stalled head record was still pending */
+  val finishedDuringStall = new java.util.concurrent.atomic.AtomicInteger(0)
+  @volatile var headStalled = false
+  @volatile var headInterrupted = false
 }
 
 class EnrichJobSpec extends SparkSpec {
@@ -442,5 +450,124 @@ class EnrichJobSpec extends SparkSpec {
     // the ordinary paths are untouched by the accounting
     assert(report(6L)._4 == 1L && report(6L)._5 == "parse")
     Seq(1L, 2L, 5L).foreach(i => assert(report(i)._2 == 1L && report(i)._4 == 1L))
+  }
+
+  private val plainCfg = JobConfig(
+    id = "window", erbTemplate = "<%= id %>",
+    backendEndpoint = "http://fake", model = "m", outputLabel = "summary",
+    systemErbTemplate = None, params = Map.empty, useImages = false,
+    responseFormat = None)
+
+  private def numbered(n: Int) = (1 to n)
+    .map(i => (i.toString, Map("content" -> s"c$i"), Seq.empty[String]))
+    .toDF("id", "texts", "images").coalesce(1)
+
+  test("HTTP 400 is terminal: the client is called exactly once per record") {
+    EnrichJobSpec.calls.set(0)
+    val rejecting = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        EnrichJobSpec.calls.incrementAndGet()
+        throw new HttpStatusException(400, "bad request")
+      }
+    }
+    val dead = EnrichJob.run(numbered(6), plainCfg, rejecting,
+      EnrichOptions(maxRetries = 2, retryBackoffMs = 1)).deadLetter.collect()
+    assert(EnrichJobSpec.calls.get() == 6)
+    assert(dead.length == 6)
+    assert(dead.forall(_.getAs[String]("error") == "API request failed: HTTP 400: bad request"))
+  }
+
+  test("a stalled head record does not idle the window; output keeps input order") {
+    import EnrichJobSpec._
+    inflight.set(0); maxInflight.set(0); finishedDuringStall.set(0)
+    headStalled = true
+    val concurrency = 4
+    val client = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        val id = ms.last.text.toInt
+        val now = inflight.incrementAndGet()
+        maxInflight.accumulateAndGet(now, math.max)
+        try {
+          if (id == 1) {
+            // hold the head until 12 later records have finished
+            val until = System.nanoTime() + 20L * 1000000000L
+            while (finishedDuringStall.get() < 12 && System.nanoTime() < until) Thread.sleep(5)
+            headStalled = false
+          } else {
+            Thread.sleep(20)
+            if (headStalled) finishedDuringStall.incrementAndGet()
+          }
+          s"r$id"
+        } finally { inflight.decrementAndGet(); () }
+      }
+    }
+    val ids = EnrichJob.run(numbered(40), plainCfg, client,
+      EnrichOptions(concurrency = concurrency)).good.select("id").as[String].collect()
+    assert(ids.toSeq == (1 to 40).map(_.toString), "single-partition output in input order")
+    assert(finishedDuringStall.get() >= 12,
+      s"only ${finishedDuringStall.get()} calls finished behind the stalled head")
+    assert(maxInflight.get() == concurrency)
+  }
+
+  test("a record past its deadline is dead-lettered and its call interrupted") {
+    import EnrichJobSpec._
+    headInterrupted = false
+    val client = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        if (ms.last.text == "2")
+          try Thread.sleep(60000)
+          catch { case e: InterruptedException => headInterrupted = true; throw e }
+        "ok"
+      }
+    }
+    val t0 = System.nanoTime()
+    val r = EnrichJob.run(numbered(4), plainCfg.copy(requestTimeoutSec = 1), client,
+      EnrichOptions(maxRetries = 0), materialize = true)
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    val dead = r.deadLetter.collect()
+    assert(dead.map(_.getAs[String]("id")).toSeq == Seq("2"))
+    assert(dead.head.getAs[String]("error") == "API request failed: no response within 1.0 s")
+    assert(r.good.count() == 3)
+    assert(elapsed < 10, s"took ${elapsed}s")
+    val until = System.nanoTime() + 5L * 1000000000L
+    while (!headInterrupted && System.nanoTime() < until) Thread.sleep(10)
+    assert(headInterrupted, "the timed-out call was not cancelled")
+  }
+
+  test("retry classes: 4xx but 408/429 and unparseable bodies are terminal") {
+    Seq(400, 401, 403, 404, 422).foreach(s =>
+      assert(EnrichJob.isTerminal(new HttpStatusException(s, "")), s))
+    Seq(408, 429, 500, 502, 503).foreach(s =>
+      assert(!EnrichJob.isTerminal(new HttpStatusException(s, "")), s))
+    assert(EnrichJob.isTerminal(new MalformedResponseException(new RuntimeException("x"))))
+    assert(!EnrichJob.isTerminal(new java.net.http.HttpTimeoutException("slow")))
+    assert(!EnrichJob.isTerminal(new RuntimeException("transient")))
+  }
+
+  test("back-off: integer Retry-After capped at the request timeout, else exponential, always jittered") {
+    val opts = EnrichOptions(retryBackoffMs = 500)
+    def draws(e: Throwable, attempt: Int, timeoutSec: Int = 240) =
+      (1 to 50).map(_ => EnrichJob.backoffMs(e, attempt, opts, timeoutSec))
+    def within(xs: Seq[Long], lo: Long) =
+      assert(xs.forall(x => x >= lo && x <= lo * 6 / 5), s"$xs outside [$lo, ${lo * 6 / 5}]")
+    val after2 = draws(new HttpStatusException(429, "", Some("2")), 0)
+    within(after2, 2000)
+    assert(after2.distinct.size > 1, "no jitter")
+    within(draws(new HttpStatusException(503, "", Some("999")), 0, timeoutSec = 5), 5000)
+    within(draws(new HttpStatusException(503, "", Some("Wed, 21 Oct 2015 07:28:00 GMT")), 1), 1000)
+    val plain = draws(new RuntimeException("x"), 2)
+    within(plain, 2000)
+    assert(plain.distinct.size > 1, "no jitter")
+  }
+
+  test("withRetry never retries an interrupt") {
+    var attempts = 0
+    intercept[InterruptedException] {
+      EnrichJob.withRetry(EnrichOptions(maxRetries = 3, retryBackoffMs = 1), 240) {
+        attempts += 1
+        throw new InterruptedException("task killed")
+      }
+    }
+    assert(attempts == 1)
   }
 }
